@@ -15,6 +15,24 @@ probability sample S_A); three scenarios then produce the estimate:
 Model types: ``"normal"`` (OLS) or ``"logistic"`` (IRLS GLM), with the
 reference's dynamic formula re-resolution against join suffixes
 (``construir_formula_dinamica``, ``PC.R:1-39``) via ``Formula.resolve``.
+
+One body serves ``pc_estimator()`` and the grouped Monte Carlo / domain
+callers: ``_calibrate_b`` (the S_B calibration every scenario starts from,
+shareable through the grouped ``calb=`` hook) and ``_pc_body`` (the
+scenario).  Execution profile per call, at any scale and any number of
+groups (nothing O(N) is collected):
+
+  - the A/B join (two-table mode only; a shuffle each pass re-runs);
+  - ONE fused aggregation: sizes, weight sums, aux population totals
+    (direct sums or the HT ingredients), the B-masked calibration Gram
+    and, for a ``"normal"`` outcome model, its OLS Gram;
+  - a stacked k x k driver solve, k = #aux; the per-group scalars return
+    as literals when ungrouped (no join), else one broadcast join;
+  - scenario 1: ONE svymean pass.  Scenarios 2/3: ONE fused masked pass
+    (after one pass per IRLS step for a ``"logistic"`` model, or one Gram
+    pass when the calibration or the fit is injected).
+
+Nothing is cached (see ``estimators.regdi`` for the measurement).
 """
 
 from __future__ import annotations
@@ -26,11 +44,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_integration_est_spark.design import SurveyDesign
+from data_integration_est_spark.estimators.regdi import (
+    Cell,
+    Estimates,
+    _arr,
+    _drop_empty,
+    _fit,
+    _fit_quality,
+    _fit_quality_aggs,
+    _fitter,
+    _gram,
+    _gram_aggs,
+    _note_fit,
+    _prepare,
+    _sample_sizes,
+    _size_aggs,
+)
 from data_integration_est_spark.formula import Formula
 from data_integration_est_spark.integrate import IntegrationError
-from data_integration_est_spark.kernels.linalg import CalibrationError, fit_logistic, fit_ols
-from data_integration_est_spark.kernels.stats import svymean
-from data_integration_est_spark.estimators.regdi import _prepare
+from data_integration_est_spark.kernels.linalg import (
+    CalibrationError,
+    FitResult,
+    greg_weights,
+    ols_from_sums,
+    ols_sums,
+)
+from data_integration_est_spark.kernels.stats import _collect_keyed, svymean
 
 
 @dataclass
@@ -45,6 +84,18 @@ class PCResult:
     # IRLS convergence of the outcome model (scenarios 2/3); None when no
     # model is fit (scenario 1) — mirrors R glm's $converged.
     model_converged: bool | None = None
+
+
+@dataclass
+class PCCalibration:
+    """The calibrated S_B weights (``PC.R:180-237``) for every group."""
+
+    df: DataFrame  # the input rows + d_i_B, w_cal_B (and d_i_A given S_A)
+    N: dict  # group key -> population size
+    sizes: dict  # group key -> (n_A, n_B); n_A = 0 without S_A
+    cal_cols: list[str]
+    rows: dict  # group key -> the fused-pass row (with any ``extra_aggs``)
+    empty: np.ndarray  # per key: no units to calibrate (see ``_sample_sizes``)
 
 
 def pc_estimator(
@@ -66,6 +117,8 @@ def pc_estimator(
     scenario: int = 1,
     eval_model_performance: bool = False,
 ) -> PCResult:
+    if scenario == 1 and y_B_col is None:
+        raise ValueError("for scenario 1, 'y_B_col' cannot be None")
     df, ind_A, ind_B, y_A, y_B, aux_A, aux_B, data_direct = _prepare(
         data, data_A, data_B, id_var_A, id_var_B, ind_var_A, ind_var_B,
         # scenario 2 allows y_B_col=None conceptually, but the join/indicator
@@ -73,231 +126,214 @@ def pc_estimator(
         # same (ind derivation reads y_B_col, ``PC.R:95-109``).
         y_A_col or "", y_B_col or y_A_col or "", aux_vars,
     )
-    indA = F.col(ind_A) == 1
-    indB = F.col(ind_B) == 1
-
-    # ONE fused pass: sizes, weight sums, aux population totals (direct
-    # sums or the masked HT ingredients), AND the B-side calibration Gram
-    # (an indB-masked weighted sum, scaled on the driver when d_i_B is the
-    # constant N/n_B).  Scenario 1 then completes in TWO data passes total
-    # (this one + the single-pass svymean).
-    aux_list = list(aux_vars or [])
-    cal_cols = aux_list if data_direct else aux_B
-    kb = len(cal_cols)
-    aggs = [
-        F.count(F.lit(1)).alias("nrows"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("size_A"),
-        F.sum(F.when(indB, 1).otherwise(0)).alias("size_B"),
-    ]
-    if weights_A is not None:
-        if weights_A not in df.columns:
-            raise IntegrationError(f"'weights_A' column {weights_A!r} not found in the data")
-        aggs.append(
-            F.sum(F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)).alias("sum_wA")
-        )
-    if weights_B is not None and weights_B not in df.columns:
-        raise IntegrationError(f"'weights_B' column {weights_B!r} not found in the data")
-    if data_direct:
-        # population aux totals: direct sums over the full table (``PC.R:182-187``)
-        aggs += [F.sum(F.col(z).cast("double")).alias(f"pt_{z}") for z in aux_list]
-    else:
-        # HT ingredients from sample A: masked sums of the A-side aux
-        # (``PC.R:188-193``); scaled by N/n_A afterwards when weights_A
-        # is absent
-        wA_mask = (
-            F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-            if weights_A is not None
-            else F.when(indA, 1.0).otherwise(0.0)
-        )
-        aggs += [
-            F.sum(wA_mask * F.col(z).cast("double")).alias(f"ht_{i}")
-            for i, z in enumerate(aux_A)
-        ]
-    wB_mask = (
-        F.when(indB, F.col(weights_B).cast("double")).otherwise(0.0)
-        if weights_B is not None
-        else F.when(indB, 1.0).otherwise(0.0)
+    est = _pc_body(
+        df, scenario, y_A, y_B, ind_A, ind_B, aux_A, aux_B, [], population=data_direct,
+        N_total=N_total, weights_A=weights_A, weights_B=weights_B,
+        outcome_model=outcome_model, model_type=model_type,
+        eval_model_performance=eval_model_performance,
     )
-    zb = [F.col(c).cast("double") for c in cal_cols]
-    aggs += [
-        F.sum(wB_mask * zb[i] * zb[j]).alias(f"gb_{i}_{j}")
-        for i in range(kb) for j in range(i, kb)
-    ]
-    aggs += [F.sum(wB_mask * zb[i]).alias(f"hb_{i}") for i in range(kb)]
-    df = df.persist()
-    tot = df.agg(*aggs).collect()[0]
+    c, fit = est.cells[()], est.fit
+    return PCResult(
+        estimate=c.estimate, se=c.se, rmse=c.rmse, r2=c.r2, df=est.df,
+        weight_col=est.weight_col,
+        model_coef=None if fit is None else fit.coef_for(()),
+        model_converged=None if fit is None else fit.converged,
+    )
 
-    size_A, size_B = int(tot["size_A"] or 0), int(tot["size_B"] or 0)
-    if size_A == 0:
-        raise IntegrationError("no units in sample A")
-    if size_B == 0:
-        raise IntegrationError("no units in sample B")
 
-    if N_total is None:
-        if data_direct:
-            N_total = float(tot["nrows"])
-        elif weights_A is not None:
-            N_total = float(tot["sum_wA"])
-        else:
-            raise IntegrationError(
-                "to approximate N_total, provide sample-A weights ('weights_A')"
-            )
+def _calibrate_b(
+    df: DataFrame,
+    ind_A: str | None,
+    ind_B: str,
+    aux_A: list[str],
+    aux_B: list[str],
+    group_cols: list[str],
+    *,
+    population: bool = True,
+    N_total: float | None = None,
+    weights_A: str | None = None,
+    weights_B: str | None = None,
+    need_A: bool = False,
+    extra_aggs: list | None = None,
+) -> PCCalibration:
+    """Design weights and the calibrated S_B weights for every group.
 
-    # design weights (``PC.R:149-171``)
-    if weights_A is not None:
-        dA = F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
+    ``population``: the frame holds the whole population, so the aux
+    totals are its direct sums (``PC.R:182-187``); otherwise they are
+    Horvitz-Thompson estimates from S_A (``PC.R:188-193`` — two-table mode,
+    and grouped calls with ``weights_A``).  The reference calibrates on
+    aux_vars_B with totals estimated on aux_vars_A; we keep that pairing.
+    S_A must have units when the totals come from it or when ``need_A``."""
+    for w, name in ((weights_A, "weights_A"), (weights_B, "weights_B")):
+        if w is not None and w not in df.columns:
+            raise IntegrationError(f"'{name}' column {w!r} not found in the data")
+    indA = None if ind_A is None else F.col(ind_A) == 1
+    indB = F.col(ind_B) == 1
+    wA = None if weights_A is None else F.col(weights_A).cast("double")
+    wB = None if weights_B is None else F.col(weights_B).cast("double")
+
+    # ONE fused pass: sizes, weight sums, aux totals (direct sums or the
+    # A-masked HT ingredients, scaled by N/n_A on the driver when weights_A
+    # is absent) AND the B-side calibration Gram
+    aggs = _size_aggs(indA, indB, wA)
+    ht_w = F.lit(1.0) if population else F.when(indA, wA if wA is not None else 1.0).otherwise(0.0)
+    aggs += [F.sum(ht_w * F.col(z).cast("double")).alias(f"t_{i}") for i, z in enumerate(aux_A)]
+    aggs += _gram_aggs(F.when(indB, wB if wB is not None else F.lit(1.0)).otherwise(0.0), aux_B)
+    rows = _collect_keyed(df, group_cols, aggs + list(extra_aggs or []))
+    keys = list(rows)
+    size_A, size_B, N, empty = _sample_sizes(
+        rows, keys, group_cols, population, N_total, weights_A, has_A=indA is not None,
+        need_A=need_A or not population,
+    )
+    T = np.column_stack([_arr(rows, keys, f"t_{i}") for i in range(len(aux_A))] or
+                        [np.zeros((len(keys), 0))])
+    if not population and wA is None:
+        T = T * (N / np.maximum(size_A, 1))[:, None]
+
+    # design weights (``PC.R:149-171``): weight columns, or N/n bound per
+    # group next to the calibration multipliers
+    extra = {}
+    if wB is not None:
+        dB, b_scale = F.when(indB, wB).otherwise(0.0), np.ones(len(keys))
     else:
-        dA = F.when(indA, F.lit(float(N_total) / size_A)).otherwise(0.0)
-    if weights_B is not None:
-        dB = F.when(indB, F.col(weights_B).cast("double")).otherwise(0.0)
-    else:
-        dB = F.when(indB, F.lit(float(N_total) / size_B)).otherwise(0.0)
-    df = df.withColumn("d_i_A", dA).withColumn("d_i_B", dB)
+        b_scale = extra["__dB__"] = N / np.maximum(size_B, 1)
+        dB = F.when(indB, F.col("__dB__")).otherwise(0.0)
+    if indA is not None and wA is None:
+        extra["__dA__"] = N / np.maximum(size_A, 1)
+    # calibrate S_B weights (``PC.R:216-237``); an empty group keeps its
+    # design weights (lam = 0) and is left out of the estimates
+    G, h = _gram(rows, keys, len(aux_B), b_scale)
+    G[empty], h[empty] = np.eye(len(aux_B)), T[empty]
+    df, _ = greg_weights(df, aux_B, G, h, T, keys, group_cols, "d_i_B", "w_cal_B",
+                         d=dB, extra=extra)
+    if indA is not None:
+        dA = F.when(indA, wA if wA is not None else F.col("__dA__")).otherwise(0.0)
+        df = df.withColumn("d_i_A", dA)
+    sizes = {k: (int(a), int(b)) for k, a, b in zip(keys, size_A, size_B)}
+    return PCCalibration(df.drop(*extra), dict(zip(keys, N)), sizes, list(aux_B), rows, empty)
 
-    # population aux totals (``PC.R:180-199``): direct sums, or HT from
-    # sample A — note the reference calibrates on aux_vars_B with totals
-    # estimated on aux_vars_A; we reproduce exactly that pairing.
-    a_scale = 1.0 if weights_A is not None else float(N_total) / size_A
-    if aux_list:
-        if data_direct:
-            T_b = np.array([float(tot[f"pt_{z}"] or 0.0) for z in aux_list])
-        else:
-            T_b = np.array([
-                a_scale * float(tot[f"ht_{i}"] or 0.0) for i in range(len(aux_A))
-            ])
-    else:
-        T_b = None
 
-    # calibrate S_B weights (``PC.R:216-237``): driver solve over the
-    # fused-pass Gram, weights as a broadcast column expression
-    sample_B = df.filter(indB)
-    if aux_list:
-        from data_integration_est_spark.kernels.gram import dot_expr
-        from data_integration_est_spark.kernels.linalg import _solve_stacked
-
-        b_scale = 1.0 if weights_B is not None else float(N_total) / size_B
-        Gb = np.zeros((kb, kb))
-        for i in range(kb):
-            for j in range(i, kb):
-                Gb[i, j] = Gb[j, i] = b_scale * float(tot[f"gb_{i}_{j}"] or 0.0)
-        hb = np.array([b_scale * float(tot[f"hb_{i}"] or 0.0) for i in range(kb)])
-        lam = _solve_stacked(Gb[None, ...], (T_b - hb)[None, :, None], "calibrate").ravel()
-        wB_cal_expr = F.col("d_i_B") * (F.lit(1.0) + dot_expr(cal_cols, lam))
-        b_df = sample_B.withColumn("w_cal_B", wB_cal_expr)
-        b_design = SurveyDesign(
-            df=b_df, weight_col="w_cal_B", calibration_cols=cal_cols, base_weight_col="d_i_B"
-        )
-    else:
-        wB_cal_expr = F.col("d_i_B")
-        b_df = sample_B.withColumn("w_cal_B", wB_cal_expr)
-        b_design = SurveyDesign(df=b_df, weight_col="w_cal_B")
-
-    try:
-        if scenario == 1:
-            if y_B_col is None:
-                raise ValueError("for scenario 1, 'y_B_col' cannot be None")
-            est = svymean(b_design, y_B)[0]
-            return PCResult(estimate=est.estimate, se=est.se, df=b_df, weight_col="w_cal_B")
-        if scenario == 2:
-            return _scenario_2(
-                df, b_df, wB_cal_expr, indA, indB, y_A, outcome_model, model_type, N_total
-            )
-        if scenario == 3:
-            return _scenario_3(
-                df, b_df, wB_cal_expr, indA, indB, y_A, y_B, outcome_model, model_type,
-                N_total, eval_model_performance,
-            )
+def _pc_body(
+    df: DataFrame,
+    scenario: int,
+    y_A: str | None,
+    y_B: str,
+    ind_A: str | None,
+    ind_B: str,
+    aux_A: list[str],
+    aux_B: list[str],
+    group_cols: list[str],
+    *,
+    population: bool = True,
+    N_total: float | None = None,
+    weights_A: str | None = None,
+    weights_B: str | None = None,
+    outcome_model: str | None = None,
+    model_type: str = "normal",
+    eval_model_performance: bool = False,
+    fit: FitResult | None = None,
+    calb: PCCalibration | None = None,
+    u_stats: dict | None = None,
+    diag: dict | None = None,
+) -> Estimates:
+    """PC scenario ``scenario`` for every group of ``group_cols`` (none:
+    one population).  ``calb`` injects a :func:`_calibrate_b` result of the
+    same arguments; ``fit``/``u_stats`` a shared outcome model and its
+    population prediction moments (scenario 3)."""
+    if scenario not in (1, 2, 3):
         raise ValueError(f"invalid scenario {scenario!r}: must be 1, 2 or 3")
-    finally:
-        df.unpersist()
+    if scenario != 1:
+        if outcome_model is None:
+            raise ValueError("must provide 'outcome_model' for the prediction model")
+        if not y_A:
+            raise ValueError("must provide 'y_A_col' for the prediction model")
+        _fitter(model_type)  # rejects a bad model_type before any Spark job
+    indA, indB = (None if ind_A is None else F.col(ind_A) == 1), F.col(ind_B) == 1
+    fused = None
+    if scenario != 1:
+        formula = Formula.parse(outcome_model).resolve(df.columns)
+        sample = indA & indB if scenario == 2 else indA
+        if calb is None and fit is None and model_type == "normal":
+            # the outcome model's OLS Gram rides the calibration pass
+            fused = (formula.response, list(formula.predictors), formula.intercept)
+    cal = calb or _calibrate_b(
+        df, ind_A, ind_B, aux_A, aux_B, group_cols, population=population,
+        N_total=N_total, weights_A=weights_A, weights_B=weights_B, need_A=scenario != 1,
+        extra_aggs=ols_sums(*fused, sample) if fused else None,
+    )
+    keys, b_df = list(cal.N), cal.df.filter(indB)
+    if scenario == 1:
+        design = SurveyDesign(
+            df=b_df, weight_col="w_cal_B", calibration_cols=cal.cal_cols or None,
+            base_weight_col="d_i_B" if cal.cal_cols else None,
+        )
+        cells = {e.key: Cell(e.estimate, e.variance) for e in svymean(design, y_B, group_cols)}
+        return _drop_empty(Estimates(cells, cal.sizes, b_df, "w_cal_B"), keys, cal.empty)
+    if fit is None:
+        try:
+            fit = (ols_from_sums(cal.rows, *fused, group_cols) if fused
+                   else _fit(df.filter(sample), formula, model_type, group_cols))
+        except CalibrationError as e:
+            if scenario != 2:
+                raise
+            raise IntegrationError(
+                f"cannot fit the prediction model on the S_A ∩ S_B intersection: {e}"
+            ) from e
+    _note_fit(diag, fit)
+    work, pred = fit.predict_expr_grouped(cal.df)
+    ya = F.col(y_A).cast("double")
+    if scenario == 2:
+        cells = _scenario_2(work, pred, indA, indB, ya, weights_A, group_cols, cal.N)
+    else:
+        cells = _scenario_3(work, pred, indA, indB, ya, y_B, group_cols, cal.N,
+                            eval_model_performance, u_stats)
+    # a group the fit never saw (no sample rows) has no estimate either
+    fitted = set(fit.keys)
+    unfit = cal.empty | np.array([k not in fitted for k in keys], dtype=bool)
+    return _drop_empty(Estimates(cells, cal.sizes, b_df, "w_cal_B", fit), keys, unfit)
 
 
-def _fit(sample: DataFrame, formula: Formula, model_type: str):
-    if model_type == "normal":
-        return fit_ols(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                       intercept=formula.intercept)
-    if model_type == "logistic":
-        return fit_logistic(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                            intercept=formula.intercept)
-    raise ValueError("model_type must be 'normal' or 'logistic'")
-
-
-def _scenario_2(df, b_df, wB_cal_expr, indA, indB, y_A, outcome_model, model_type,
-                N_total) -> PCResult:
+def _scenario_2(work, pred, indA, indB, ya, weights_A, group_cols, N) -> dict:
     """y unobserved in S_B: model on A∩B, combine (``PC.R:255-297``).
 
     term1 (over S_B) and term2 (over S_A) are indicator-masked sums over the
-    same combined table, so they run as ONE fused aggregation; the empty-
-    intersection case surfaces from the fit's own Gram pass (no pre-count job).
-    """
-    if outcome_model is None:
-        raise ValueError("must provide 'outcome_model' for the prediction model")
-    if not y_A:
-        raise ValueError("must provide 'y_A_col' for the prediction model")
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    try:
-        fit = _fit(df.filter(indA & indB), formula, model_type)
-    except CalibrationError as e:
-        raise IntegrationError(
-            f"cannot fit the prediction model on the S_A ∩ S_B intersection: {e}"
-        ) from e
-    pred = fit.predict_expr()
-
-    # term1 = sum_B w_cal_B * yhat ; term2 = sum_A d_A * (y_A - yhat)
-    row = df.agg(
-        F.sum(F.when(indB, wB_cal_expr * pred)).alias("t1"),
-        F.sum(F.when(indA, F.col("d_i_A") * (F.col(y_A).cast("double") - pred))).alias("t2"),
-    ).collect()[0]
-    est = ((row["t1"] or 0.0) + (row["t2"] or 0.0)) / float(N_total)
-    return PCResult(estimate=float(est), model_coef=fit.coef_for(()), df=b_df,
-                    weight_col="w_cal_B", model_converged=fit.converged)
+    same combined table, so they run as ONE fused aggregation; with no
+    ``weights_A`` the constant d_A = N/n_A scales term2 on the driver."""
+    wA = F.lit(1.0) if weights_A is None else F.col(weights_A).cast("double")
+    rows = _collect_keyed(work, group_cols, [
+        F.sum(F.when(indB, F.col("w_cal_B") * pred)).alias("t1"),
+        F.sum(F.when(indA, wA * (ya - pred))).alias("t2"),
+        F.sum(F.when(indA, 1).otherwise(0)).alias("n_A"),
+    ])
+    cells = {}
+    for key, r in rows.items():
+        t2 = (r["t2"] or 0.0) * (1.0 if weights_A else N[key] / max(r["n_A"], 1))
+        cells[key] = Cell(float(((r["t1"] or 0.0) + t2) / N[key]))
+    return cells
 
 
-def _scenario_3(
-    df, b_df, wB_cal_expr, indA, indB, y_A, y_B, outcome_model, model_type, N_total,
-    eval_model_performance,
-) -> PCResult:
+def _scenario_3(work, pred, indA, indB, ya, y_B, group_cols, N, eval_model_performance,
+                u_stats) -> dict:
     """NMAR DR1 (``PC.R:299-354``):
-    Yhat_DR1 = (sum_B d_B*(y_B - yhat) + sum_U yhat) / N.
+    Yhat_DR1 = (sum_B w_cal_B*(y_B - yhat) + sum_U yhat) / N.
 
     The U-side prediction sum, the A-side residual stats, AND the B-side
     calibrated residual total are all masked sums over the same combined
-    table — ONE fused aggregation after the model fit."""
-    if outcome_model is None:
-        raise ValueError("must provide 'outcome_model' for the prediction model")
-    if not y_A:
-        raise ValueError("must provide 'y_A_col' for the prediction model")
-    if not y_B:
-        raise ValueError("for scenario 3, 'y_B_col' cannot be None")
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    fit = _fit(df.filter(indA), formula, model_type)
-    pred = fit.predict_expr()
-
-    ya = F.col(y_A).cast("double")
-    # term1 = sum_B w_cal_B * (y_B - yhat)  — the reference's d_i_B holds the
-    # calibrated weights at this point (``PC.R:233``), zero off-B, and the
-    # sum in ``PC.R:325`` therefore only ranges over B rows.
-    stats = df.select(
-        pred.alias("__yhat__"),
-        ya.alias("__ya__"),
-        F.when(indA, 1).otherwise(0).alias("__ia__"),
-        F.when(indB, wB_cal_expr * (F.col(y_B).cast("double") - pred)).alias("__bres__"),
-    ).agg(
-        F.sum("__yhat__").alias("sum_pred_U"),
-        F.sum(F.when(F.col("__ia__") == 1, F.pow(F.col("__ya__") - F.col("__yhat__"), 2))).alias("ssr_A"),
-        F.avg(F.when(F.col("__ia__") == 1, F.pow(F.col("__ya__") - F.col("__yhat__"), 2))).alias("mse_A"),
-        F.var_samp(F.when(F.col("__ia__") == 1, F.col("__ya__"))).alias("var_yA"),
-        F.sum(F.when(F.col("__ia__") == 1, 1).otherwise(0)).alias("n_A"),
-        F.sum("__bres__").alias("t1"),
-    ).collect()[0]
-
-    est = ((stats["t1"] or 0.0) + (stats["sum_pred_U"] or 0.0)) / float(N_total)
-
-    rmse = r2 = None
+    table — ONE fused aggregation after the model fit.  The reference's
+    d_i_B holds the calibrated weights at this point (``PC.R:233``), zero
+    off-B, so term1 only ranges over B rows (``PC.R:325``)."""
+    aggs = [
+        F.sum(F.when(indB, F.col("w_cal_B") * (F.col(y_B).cast("double") - pred))).alias("t1"),
+        F.sum(F.when(indA, 1).otherwise(0)).alias("n_A"),
+    ]
     if eval_model_performance:
-        rmse = float((stats["mse_A"] or 0.0) ** 0.5)
-        n_A = int(stats["n_A"])
-        sst = (stats["var_yA"] or 0.0) * (n_A - 1)
-        r2 = 1.0 - (stats["ssr_A"] or 0.0) / sst if sst > 0 else float("nan")
-    return PCResult(estimate=float(est), model_coef=fit.coef_for(()), rmse=rmse, r2=r2,
-                    df=b_df, weight_col="w_cal_B", model_converged=fit.converged)
+        aggs += _fit_quality_aggs(indA, ya, pred)
+    if u_stats is None:
+        aggs.append(F.sum(pred).alias("sum_pred"))
+    rows = _collect_keyed(work, group_cols, aggs)
+    cells = {}
+    for key, r in rows.items():
+        est = ((r["t1"] or 0.0) + ((u_stats or rows)[key]["sum_pred"] or 0.0)) / N[key]
+        rmse, r2 = _fit_quality(r) if eval_model_performance else (None, None)
+        cells[key] = Cell(float(est), None, rmse, r2)
+    return cells

@@ -4,12 +4,17 @@ The reference runs its Monte Carlo studies as a serial R loop
 (``nb[4]:29-196``) or a ``parLapply`` process pool over (gamma, sim) cells
 (``nb[23]:130-143``).  Here the replicate and grid dimensions are ordinary
 key columns of ONE DataFrame and every estimator below computes ALL cells
-at once: per-group totals are a single groupBy pass, the per-group k x k
-calibration/OLS solves are one stacked ``numpy.linalg.solve`` on the
-driver, and the solved vectors return to executors via a broadcast join.
-Per full estimator-suite-on-a-grid: ~4-6 shuffles TOTAL, independent of
-the number of replicates — the 100 TB-shaped replacement for a process
-pool.
+at once.  The RegDI and PC names are thin front doors over the SAME bodies
+``regdi()`` / ``pc_estimator()`` run (``estimators.regdi._regdi_body``,
+``estimators.pc._pc_body``) with ``group_cols`` set: one fused groupBy
+aggregation collects every cell's sizes, totals and calibration Gram, the
+per-cell k x k solves are one stacked ``numpy.linalg.solve`` on the
+driver, and the solved scalars return to executors via ONE broadcast join.
+Per estimator call: the fused pass plus one estimate pass (plus a model-fit
+pass for a logistic model; an OLS fit rides the fused pass unless a
+shared fit is injected), independent of the number of replicates — the
+100 TB-shaped replacement for a process pool.
+``group_cols=[]`` is exactly the scalar call (no join).
 
 Only O(k^2 * groups) scalars ever reach the driver (k <= ~6, groups =
 |grid| x n_sim — thousands).  Group keys must not be named like internal
@@ -23,53 +28,20 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
-from data_integration_est_spark.design import SurveyDesign
+from data_integration_est_spark.estimators.pc import PCCalibration, _calibrate_b, _pc_body
+from data_integration_est_spark.estimators.regdi import (
+    Estimates,
+    _fit,
+    _note_fit,
+    _regdi_body,
+)
 from data_integration_est_spark.formula import Formula
-from data_integration_est_spark.kernels.linalg import calibrate, fit_logistic, fit_ols
-from data_integration_est_spark.kernels.stats import svymean
-from data_integration_est_spark.util import local_df
+from data_integration_est_spark.kernels.linalg import bind_group_values, fit_ols
 
 
-def _fit_grouped(sample: DataFrame, formula: Formula, model_type: str, group_cols):
-    if model_type == "normal":
-        return fit_ols(sample, y_col=formula.response, x_cols=list(formula.predictors),
-                       intercept=formula.intercept, group_cols=group_cols)
-    if model_type == "logistic":
-        return fit_logistic(sample, y_col=formula.response,
-                            x_cols=list(formula.predictors),
-                            intercept=formula.intercept, group_cols=group_cols)
-    raise ValueError("model_type must be 'normal' or 'logistic'")
-
-
-def _note_fit(diag: dict | None, fit) -> None:
-    """Accumulate fit-health counters into a caller-supplied dict — the
-    Monte Carlo harness surfaces these on MCResult.diagnostics so silent
-    numerical issues in big grids (unconverged IRLS, undersized cells)
-    are visible without scraping warnings."""
-    if diag is None:
-        return
-    diag["n_fits"] = diag.get("n_fits", 0) + 1
-    if fit.kind == "logistic" and not fit.converged:
-        diag["unconverged"] = diag.get("unconverged", 0) + 1
-    diag["degenerate_groups"] = (
-        diag.get("degenerate_groups", 0) + len(fit.degenerate_keys)
-    )
-
-
-def _broadcast_scalars(
-    df: DataFrame, group_cols: list[str], values: dict[tuple, tuple], names: list[str]
-) -> DataFrame:
-    """Broadcast-join per-group driver scalars back onto the big table."""
-    spark = df.sparkSession
-    rows = [tuple(k) + tuple(float(v) for v in vals) for k, vals in values.items()]
-    key_schema = df.select(*group_cols).schema
-    schema = StructType(
-        list(key_schema.fields) + [StructField(n, DoubleType(), False) for n in names]
-    )
-    sdf = local_df(spark, rows, schema)
-    return df.join(F.broadcast(sdf), on=group_cols, how="inner")
+def _pairs(est: Estimates) -> dict[tuple, tuple]:
+    return {key: (c.estimate, c.se) for key, c in est.cells.items()}
 
 
 def naive_mean_grouped(
@@ -136,63 +108,10 @@ def regdi_c0_grouped(
     With ``weights_A`` the design weights come from that column and the
     population size is approximated by their sum (``RegDI2.R:106-116`` —
     the stratified-study call shape, ``nb[12]:48-76``)."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    aux = list(aux_vars or [])
-
-    work = (
-        df.withColumn("uno", F.lit(1.0))
-        .withColumn("delta_i", F.when(indB, 1.0).otherwise(0.0))
-        .withColumn("delta_yi", F.when(indB, F.col(y_B_col).cast("double")).otherwise(0.0))
-    )
-    delta_aux = []
-    for z in aux:
-        dc = f"delta_{z}"
-        work = work.withColumn(dc, F.when(indB, F.col(z).cast("double")).otherwise(0.0))
-        delta_aux.append(dc)
-    x_cols = ["uno", "delta_i", "delta_yi"] + delta_aux
-
-    aggs = [
-        F.count(F.lit(1)).alias("N"),
-        F.sum(F.when(indA, 1).otherwise(0)).alias("nA"),
-        F.sum("delta_i").alias("t_di"),
-        F.sum("delta_yi").alias("t_dyi"),
-        *[F.sum(c).alias(f"t_{c}") for c in delta_aux],
-    ]
-    if weights_A is not None:
-        aggs.append(
-            F.sum(F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)).alias("swA")
-        )
-    tot_rows = work.groupBy(*group_cols).agg(*aggs).collect()
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    d_by_group: dict[tuple, tuple] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        N_uno = float(r["swA"]) if weights_A is not None else float(r["N"])
-        totals_by_group[key] = np.array(
-            [N_uno, float(r["t_di"] or 0.0), float(r["t_dyi"] or 0.0)]
-            + [float(r[f"t_{c}"] or 0.0) for c in delta_aux]
-        )
-        d_by_group[key] = (N_uno / max(int(r["nA"]), 1),)
-
-    if weights_A is not None:
-        sample_A = work.filter(indA).withColumn(
-            "d_i_A", F.col(weights_A).cast("double")
-        )
-    else:
-        sample_A = _broadcast_scalars(
-            work.filter(indA), group_cols, d_by_group, ["d_i_A"]
-        )
-    cal = calibrate(
-        sample_A, x_cols, totals=None, d_col="d_i_A", out_col="w_cal",
-        group_cols=group_cols, totals_by_group=totals_by_group,
-    )
-    design = SurveyDesign(
-        df=cal.df, weight_col="w_cal", calibration_cols=x_cols, base_weight_col="d_i_A"
-    )
-    return {
-        e.key: (e.estimate, e.se) for e in svymean(design, y_A_col, group_cols)
-    }
+    return _pairs(_regdi_body(
+        df, ind_var_A, ind_var_B, y_A_col, y_B_col, list(aux_vars or []), group_cols,
+        0, population=weights_A is None, weights_A=weights_A,
+    ))
 
 
 def regdi_c2_grouped(
@@ -207,317 +126,12 @@ def regdi_c2_grouped(
 ) -> dict[tuple, tuple]:
     """RegDI correction-2 (measurement error) for every group at once
     (``RegDI2.R:250-307`` vectorized): per-group OLS of y_A on y_B over
-    the A∩B overlap, de-bias, then the correction-0 machinery on the
-    corrected outcome."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    fit = fit_ols(
-        df.filter(indA & indB), y_col=y_A_col, x_cols=[y_B_col],
-        group_cols=group_cols,
-    )
-    _note_fit(diag, fit)
-    coefs = {
-        key: (float(fit.coef_for(key)[0]), float(fit.coef_for(key)[1]))
-        for key in fit.keys
-    }
-    j = _broadcast_scalars(df, group_cols, coefs, ["__b0__", "__b1__"])
-    y_corr = F.when(
-        indA, (F.col(y_A_col).cast("double") - F.col("__b0__")) / F.col("__b1__")
-    ).otherwise(F.col(y_B_col).cast("double"))
-    work = j.withColumn("__y_corr__", y_corr).drop("__b0__", "__b1__")
-    return regdi_c0_grouped(
-        work, "__y_corr__", "__y_corr__", ind_var_A, ind_var_B, group_cols,
-        aux_vars=aux_vars,
-    )
-
-
-def pc_s2_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-    weights_A: str | None = None,
-    diag: dict | None = None,
-    calb: tuple | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario 2 (y unobserved in B) for every group
-    (``PC.R:255-297`` vectorized):
-    Yhat = (sum_B w_cal_B*yhat + sum_A d_A*(y_A - yhat)) / N.
-    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:274``);
-    ``weights_A`` uses the design-weight column for d_A and HT totals.
-    ``calb``: precomputed ``_calibrated_b`` result (see
-    ``pc_s1_grouped``)."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    b_df, _, sizes = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols, weights_A=weights_A, ind_var_A=ind_var_A
-    )
-
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    fit = _fit_grouped(df.filter(indA & indB), formula, model_type, group_cols)
-    _note_fit(diag, fit)
-
-    b_join, b_pred = fit.predict_expr_grouped(b_df)
-    t1_rows = (
-        b_join.select(*group_cols, (F.col("w_cal_B") * b_pred).alias("__t__"))
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t1"))
-        .collect()
-    )
-    t1 = {tuple(r[c] for c in group_cols): float(r["t1"] or 0.0) for r in t1_rows}
-
-    if weights_A is not None:
-        a_sample = df.filter(indA).withColumn("d_i_A", F.col(weights_A).cast("double"))
-    else:
-        # d_A = N / n_A per group (sizes carries n_B, so collect n_A here)
-        nA_rows = (
-            df.groupBy(*group_cols)
-            .agg(F.sum(F.when(indA, 1).otherwise(0)).alias("nA"))
-            .collect()
-        )
-        d_by_group = {
-            tuple(r[c] for c in group_cols): (
-                sizes[tuple(r[c] for c in group_cols)][0] / max(int(r["nA"]), 1),
-            )
-            for r in nA_rows
-        }
-        a_sample = _broadcast_scalars(df.filter(indA), group_cols, d_by_group, ["d_i_A"])
-    a_join, a_pred = fit.predict_expr_grouped(a_sample)
-    t2_rows = (
-        a_join.select(
-            *group_cols,
-            (F.col("d_i_A") * (F.col(y_A_col).cast("double") - a_pred)).alias("__t__"),
-        )
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t2"))
-        .collect()
-    )
-    out: dict[tuple, tuple] = {}
-    for r in t2_rows:
-        key = tuple(r[c] for c in group_cols)
-        N, _ = sizes[key]
-        out[key] = ((t1[key] + float(r["t2"] or 0.0)) / N, None)
-    return out
-
-
-def _calibrated_b(
-    df: DataFrame,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-):
-    """Shared PC step: per-group aux totals + B-weight calibration
-    (``PC.R:180-237`` vectorized).  Returns (b_df, x_cols, per-group
-    N / n_B dict).
-
-    Default: direct population sums (direct mode).  With ``weights_A``
-    (and ``ind_var_A``) the totals are Horvitz-Thompson estimates from
-    the weighted probability sample and N is the weight sum — the
-    reference's two-table shape (``PC.R:188-199``, ``nb[12]:78-88``)."""
-    indB = F.col(ind_var_B) == 1
-    ht = weights_A is not None
-    if ht:
-        indA = F.col(ind_var_A) == 1
-        wA = F.when(indA, F.col(weights_A).cast("double")).otherwise(0.0)
-        aggs = [
-            F.sum(wA).alias("N"),
-            F.sum(F.when(indB, 1).otherwise(0)).alias("nB"),
-            *[F.sum(wA * F.col(z).cast("double")).alias(f"t_{z}") for z in aux_vars],
-        ]
-    else:
-        aggs = [
-            F.count(F.lit(1)).cast("double").alias("N"),
-            F.sum(F.when(indB, 1).otherwise(0)).alias("nB"),
-            *[F.sum(F.col(z).cast("double")).alias(f"t_{z}") for z in aux_vars],
-        ]
-    tot_rows = df.groupBy(*group_cols).agg(*aggs).collect()
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    scalars: dict[tuple, tuple] = {}
-    sizes: dict[tuple, tuple] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        totals_by_group[key] = np.array([float(r[f"t_{z}"] or 0.0) for z in aux_vars])
-        scalars[key] = (float(r["N"]) / max(int(r["nB"]), 1),)
-        sizes[key] = (float(r["N"]), int(r["nB"]))
-    sample_B = _broadcast_scalars(df.filter(indB), group_cols, scalars, ["d_i_B"])
-    cal = calibrate(
-        sample_B, list(aux_vars), totals=None, d_col="d_i_B", out_col="w_cal_B",
-        group_cols=group_cols, totals_by_group=totals_by_group,
-    )
-    return cal.df, list(aux_vars), sizes
-
-
-def pc_s1_grouped(
-    df: DataFrame,
-    y_B_col: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-    calb: tuple | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario 1 for every group at once (``PC.R:240-253`` vectorized);
-    ``weights_A`` switches to HT-estimated aux totals (``PC.R:188-193``).
-
-    ``calb`` (r17, guide §1.2 don't-compute-twice): a precomputed
-    ``_calibrated_b(df, ind_var_B, aux_vars, group_cols, ...)`` result —
-    several PC battery members calibrate the SAME B sample to the SAME
-    aux totals, so the MC harness computes the triple once and hands it
-    to each member; the values are the ones this function would compute
-    itself (caller's responsibility to pass a same-arguments result)."""
-    b_df, x_cols, _ = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols, weights_A=weights_A, ind_var_A=ind_var_A
-    )
-    design = SurveyDesign(
-        df=b_df, weight_col="w_cal_B", calibration_cols=x_cols, base_weight_col="d_i_B"
-    )
-    return {e.key: (e.estimate, e.se) for e in svymean(design, y_B_col, group_cols)}
-
-
-def pc_dr1_grouped(
-    df: DataFrame,
-    y_A_col: str,
-    y_B_col: str,
-    ind_var_A: str,
-    ind_var_B: str,
-    aux_vars: list[str],
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-    eval_model_performance: bool = False,
-    diag: dict | None = None,
-    fit=None,
-    calb: tuple | None = None,
-    u_stats: dict | None = None,
-) -> dict[tuple, tuple]:
-    """PC scenario-3 DR1 for every group (``PC.R:299-328`` vectorized):
-    Yhat = (sum_B w_cal_B*(y_B - yhat) + sum_U yhat) / N.
-    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:311``).
-
-    With ``eval_model_performance`` each value tuple gains the
-    per-group A-sample R² of the outcome model (``PC.R:330-340``,
-    recorded by the nb[37] study) — the residual stats ride the same
-    U-side pass as masked sums, no extra job.
-
-    Share hooks (r17, guide §1.2 don't-compute-twice): ``fit`` injects
-    a precomputed outcome model (several MC battery members fit the
-    IDENTICAL formula on the identical A sample), ``calb`` a
-    precomputed ``_calibrated_b`` result, and ``u_stats`` the
-    full-population prediction moments from
-    :func:`u_pred_stats_grouped` under the SAME fit (ignored when
-    ``eval_model_performance`` needs the A-masked residual stats that
-    ride the U pass)."""
-    indA = F.col(ind_var_A) == 1
-    b_df, _, sizes = calb if calb is not None else _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols
-    )
-
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    if fit is None:
-        fit = _fit_grouped(df.filter(indA), formula, model_type, group_cols)
-    _note_fit(diag, fit)
-
-    if u_stats is not None and not eval_model_performance:
-        u_by = u_stats
-    else:
-        u_join, u_pred = fit.predict_expr_grouped(df)
-        ya = F.col(y_A_col).cast("double")
-        u_aggs = [F.sum(F.col("__yhat__")).alias("sum_pred")]
-        if eval_model_performance:
-            res2 = F.when(indA, F.pow(ya - F.col("__yhat__"), 2))
-            u_aggs += [
-                F.sum(res2).alias("ssr_A"),
-                F.var_samp(F.when(indA, ya)).alias("var_yA"),
-                F.sum(F.when(indA, 1).otherwise(0)).alias("n_A"),
-            ]
-        u_rows = (
-            u_join.withColumn("__yhat__", u_pred)
-            .groupBy(*group_cols).agg(*u_aggs)
-            .collect()
-        )
-        u_by = {tuple(r[c] for c in group_cols): r for r in u_rows}
-
-    b_join, b_pred = fit.predict_expr_grouped(b_df)
-    t1_rows = (
-        b_join.select(
-            *group_cols,
-            (F.col("w_cal_B") * (F.col(y_B_col).cast("double") - b_pred)).alias("__t__"),
-        )
-        .groupBy(*group_cols).agg(F.sum("__t__").alias("t1"))
-        .collect()
-    )
-    out: dict[tuple, tuple] = {}
-    for r in t1_rows:
-        key = tuple(r[c] for c in group_cols)
-        N, _ = sizes[key]
-        u = u_by[key]
-        est = (float(r["t1"] or 0.0) + float(u["sum_pred"] or 0.0)) / N
-        if eval_model_performance:
-            n_A = int(u["n_A"] or 0)
-            sst = (u["var_yA"] or 0.0) * max(n_A - 1, 0)
-            r2 = 1.0 - (u["ssr_A"] or 0.0) / sst if sst > 0 else float("nan")
-            out[key] = (est, None, float(r2))
-        else:
-            out[key] = (est, None)
-    return out
-
-
-def fit_outcome_grouped(
-    df: DataFrame,
-    ind_var_A: str,
-    outcome_model: str,
-    group_cols: list[str],
-    model_type: str = "normal",
-):
-    """The outcome-model fit the DR estimators run internally
-    (A-sample, grouped) as a standalone call — EXACTLY the statement
-    ``pc_dr1_grouped``/``regdi_dr_grouped`` issue, so a battery whose
-    members share (sample, formula) can compute it once and inject it
-    via their ``fit=`` hooks (r17)."""
-    formula = Formula.parse(outcome_model).resolve(df.columns)
-    return _fit_grouped(
-        df.filter(F.col(ind_var_A) == 1), formula, model_type, group_cols
-    )
-
-
-def calibrated_b_grouped(
-    df: DataFrame,
-    ind_var_B: str,
-    aux_vars: list[str],
-    group_cols: list[str],
-    weights_A: str | None = None,
-    ind_var_A: str | None = None,
-) -> tuple:
-    """Public alias of the shared PC calibration step — computed once
-    per (B sample, aux set) and injected into the PC members'
-    ``calb=`` hooks (r17)."""
-    return _calibrated_b(
-        df, ind_var_B, aux_vars, group_cols,
-        weights_A=weights_A, ind_var_A=ind_var_A,
-    )
-
-
-def u_pred_stats_grouped(df: DataFrame, fit, group_cols: list[str]) -> dict:
-    """Full-population prediction moments under ``fit``: key ->
-    Row(sum_pred, var_pred) — the U-side pass that RegDI-DR has always
-    run (identical statement shape, so identical floats), now callable
-    once and shared with every DR battery member that uses the SAME
-    fit (r17, guide §1.2 don't-compute-twice / §2.4 share the pass)."""
-    u_join, u_pred = fit.predict_expr_grouped(df)
-    u_rows = (
-        u_join.select(*group_cols, u_pred.alias("__yhat__"))
-        .groupBy(*group_cols)
-        .agg(F.sum("__yhat__").alias("sum_pred"),
-             F.var_samp("__yhat__").alias("var_pred"))
-        .collect()
-    )
-    return {tuple(r[c] for c in group_cols): r for r in u_rows}
+    the A∩B overlap, de-bias, recalibrate.  A group whose overlap cannot
+    fit the line yields NaN and counts in ``diag['degenerate_groups']``."""
+    return _pairs(_regdi_body(
+        df, ind_var_A, ind_var_B, y_A_col, y_B_col, list(aux_vars or []), group_cols,
+        2, diag=diag,
+    ))
 
 
 def regdi_dr_grouped(
@@ -538,92 +152,150 @@ def regdi_dr_grouped(
     T = (sum_A w_cal*(y - yhat) + sum_U yhat)/N,
     V = var(w*(y - yhat))/n_A + var_U(yhat)/N.
 
-    ``fit``/``u_stats`` (r17): share hooks for a precomputed outcome
-    model and its full-population prediction moments
-    (:func:`u_pred_stats_grouped`) — see ``pc_dr1_grouped``."""
-    indA = F.col(ind_var_A) == 1
-    indB = F.col(ind_var_B) == 1
-    aux = list(aux_vars or [])
+    ``fit``/``u_stats``: share hooks for a precomputed outcome model
+    (:func:`fit_outcome_grouped`) and its full-population prediction
+    moments (:func:`u_pred_stats_grouped`)."""
+    return _pairs(_regdi_body(
+        df, ind_var_A, ind_var_B, y_A_col, y_B_col, list(aux_vars or []), group_cols,
+        3, outcome_model=outcome_model, fit=fit, u_stats=u_stats, diag=diag,
+    ))
 
-    work = (
-        df.withColumn("uno", F.lit(1.0))
-        .withColumn("delta_i", F.when(indB, 1.0).otherwise(0.0))
-        .withColumn("delta_yi", F.when(indB, F.col(y_B_col).cast("double")).otherwise(0.0))
-    )
-    delta_aux = []
-    for z in aux:
-        dc = f"delta_{z}"
-        work = work.withColumn(dc, F.when(indB, F.col(z).cast("double")).otherwise(0.0))
-        delta_aux.append(dc)
-    x_cols = ["uno", "delta_i", "delta_yi"] + delta_aux
 
-    tot_rows = (
-        work.groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("N"),
-            F.sum(F.when(indA, 1).otherwise(0)).alias("nA"),
-            F.sum("delta_i").alias("t_di"),
-            F.sum("delta_yi").alias("t_dyi"),
-            *[F.sum(c).alias(f"t_{c}") for c in delta_aux],
-        )
-        .collect()
-    )
-    totals_by_group: dict[tuple, np.ndarray] = {}
-    d_by_group: dict[tuple, tuple] = {}
-    N_by_group: dict[tuple, float] = {}
-    for r in tot_rows:
-        key = tuple(r[c] for c in group_cols)
-        totals_by_group[key] = np.array(
-            [float(r["N"]), float(r["t_di"] or 0.0), float(r["t_dyi"] or 0.0)]
-            + [float(r[f"t_{c}"] or 0.0) for c in delta_aux]
-        )
-        d_by_group[key] = (float(r["N"]) / max(int(r["nA"]), 1),)
-        N_by_group[key] = float(r["N"])
-
-    sample_A = _broadcast_scalars(work.filter(indA), group_cols, d_by_group, ["d_i_A"])
-    cal = calibrate(
-        sample_A, x_cols, totals=None, d_col="d_i_A", out_col="w_cal",
-        group_cols=group_cols, totals_by_group=totals_by_group,
+def calibrated_b_grouped(
+    df: DataFrame,
+    ind_var_B: str,
+    aux_vars: list[str],
+    group_cols: list[str],
+    weights_A: str | None = None,
+    ind_var_A: str | None = None,
+) -> PCCalibration:
+    """The PC calibration step (``PC.R:180-237`` vectorized) on its own —
+    several PC battery members calibrate the SAME B sample to the SAME aux
+    totals, so the Monte Carlo harness computes it once and hands it to
+    each member's ``calb=`` hook (the caller's responsibility to pass a
+    same-arguments result).  Default: direct population sums; with
+    ``weights_A`` (and ``ind_var_A``) Horvitz-Thompson totals from the
+    weighted probability sample and N = their weight sum — the reference's
+    two-table shape (``PC.R:188-199``, ``nb[12]:78-88``)."""
+    return _calibrate_b(
+        df, ind_var_A, ind_var_B, list(aux_vars), list(aux_vars), group_cols,
+        population=weights_A is None, weights_A=weights_A,
     )
 
+
+def pc_s1_grouped(
+    df: DataFrame,
+    y_B_col: str,
+    ind_var_B: str,
+    aux_vars: list[str],
+    group_cols: list[str],
+    weights_A: str | None = None,
+    ind_var_A: str | None = None,
+    calb: PCCalibration | None = None,
+) -> dict[tuple, tuple]:
+    """PC scenario 1 for every group at once (``PC.R:240-253`` vectorized);
+    ``weights_A`` switches to HT-estimated aux totals (``PC.R:188-193``);
+    ``calb``: a :func:`calibrated_b_grouped` result of the same arguments."""
+    return _pairs(_pc_body(
+        df, 1, None, y_B_col, ind_var_A, ind_var_B, list(aux_vars), list(aux_vars),
+        group_cols, population=weights_A is None, weights_A=weights_A, calb=calb,
+    ))
+
+
+def pc_s2_grouped(
+    df: DataFrame,
+    y_A_col: str,
+    y_B_col: str,
+    ind_var_A: str,
+    ind_var_B: str,
+    aux_vars: list[str],
+    outcome_model: str,
+    group_cols: list[str],
+    model_type: str = "normal",
+    weights_A: str | None = None,
+    diag: dict | None = None,
+    calb: PCCalibration | None = None,
+) -> dict[tuple, tuple]:
+    """PC scenario 2 (y unobserved in B) for every group
+    (``PC.R:255-297`` vectorized):
+    Yhat = (sum_B w_cal_B*yhat + sum_A d_A*(y_A - yhat)) / N.
+    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:274``);
+    ``weights_A`` uses the design-weight column for d_A and HT totals."""
+    est = _pc_body(
+        df, 2, y_A_col, y_B_col, ind_var_A, ind_var_B, list(aux_vars), list(aux_vars),
+        group_cols, population=weights_A is None, weights_A=weights_A,
+        outcome_model=outcome_model, model_type=model_type, calb=calb, diag=diag,
+    )
+    return {key: (c.estimate, None) for key, c in est.cells.items()}
+
+
+def pc_dr1_grouped(
+    df: DataFrame,
+    y_A_col: str,
+    y_B_col: str,
+    ind_var_A: str,
+    ind_var_B: str,
+    aux_vars: list[str],
+    outcome_model: str,
+    group_cols: list[str],
+    model_type: str = "normal",
+    eval_model_performance: bool = False,
+    diag: dict | None = None,
+    fit=None,
+    calb: PCCalibration | None = None,
+    u_stats: dict | None = None,
+) -> dict[tuple, tuple]:
+    """PC scenario-3 DR1 for every group (``PC.R:299-328`` vectorized):
+    Yhat = (sum_B w_cal_B*(y_B - yhat) + sum_U yhat) / N.
+    ``model_type='logistic'`` runs the grouped IRLS GLM (``PC.R:311``).
+
+    With ``eval_model_performance`` each value tuple gains the
+    per-group A-sample R² of the outcome model (``PC.R:330-340``,
+    recorded by the nb[37] study) — the residual stats ride the same
+    pass as masked sums, no extra job.  Share hooks: ``fit`` (a
+    :func:`fit_outcome_grouped` model), ``calb`` (a
+    :func:`calibrated_b_grouped` result) and ``u_stats`` (its
+    :func:`u_pred_stats_grouped` moments under the SAME fit)."""
+    est = _pc_body(
+        df, 3, y_A_col, y_B_col, ind_var_A, ind_var_B, list(aux_vars), list(aux_vars),
+        group_cols, outcome_model=outcome_model, model_type=model_type,
+        eval_model_performance=eval_model_performance, fit=fit, calb=calb,
+        u_stats=u_stats, diag=diag,
+    )
+    if eval_model_performance:
+        return {key: (c.estimate, None, c.r2) for key, c in est.cells.items()}
+    return {key: (c.estimate, None) for key, c in est.cells.items()}
+
+
+def fit_outcome_grouped(
+    df: DataFrame,
+    ind_var_A: str,
+    outcome_model: str,
+    group_cols: list[str],
+    model_type: str = "normal",
+):
+    """The outcome-model fit the DR estimators run internally
+    (A-sample, grouped) as a standalone call — EXACTLY the statement
+    ``pc_dr1_grouped``/``regdi_dr_grouped`` issue, so a battery whose
+    members share (sample, formula) can compute it once and inject it
+    via their ``fit=`` hooks."""
     formula = Formula.parse(outcome_model).resolve(df.columns)
-    if fit is None:
-        fit = fit_ols(
-            df.filter(indA), y_col=formula.response,
-            x_cols=list(formula.predictors),
-            intercept=formula.intercept, group_cols=group_cols,
-        )
-    _note_fit(diag, fit)
+    return _fit(df.filter(F.col(ind_var_A) == 1), formula, model_type, group_cols)
 
-    a_join, a_pred = fit.predict_expr_grouped(cal.df)
-    a_rows = (
-        a_join.select(
-            *group_cols,
-            (F.col("w_cal") * (F.col(y_A_col).cast("double") - a_pred)).alias("__wres__"),
-        )
+
+def u_pred_stats_grouped(df: DataFrame, fit, group_cols: list[str]) -> dict:
+    """Full-population prediction moments under ``fit``: key ->
+    Row(sum_pred, var_pred), callable once and shared with every DR
+    battery member that uses the SAME fit (``u_stats=`` hooks)."""
+    u_join, u_pred = fit.predict_expr_grouped(df)
+    u_rows = (
+        u_join.select(*group_cols, u_pred.alias("__yhat__"))
         .groupBy(*group_cols)
-        .agg(
-            F.sum("__wres__").alias("sum_wres"),
-            F.var_samp("__wres__").alias("var_wres"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        .agg(F.sum("__yhat__").alias("sum_pred"),
+             F.var_samp("__yhat__").alias("var_pred"))
         .collect()
     )
-    if u_stats is not None:
-        u_by = u_stats
-    else:
-        u_by = u_pred_stats_grouped(df, fit, group_cols)
-
-    out: dict[tuple, tuple] = {}
-    for r in a_rows:
-        key = tuple(r[c] for c in group_cols)
-        N = N_by_group[key]
-        n_A = int(r["n"])
-        u = u_by[key]
-        t = ((r["sum_wres"] or 0.0) + (u["sum_pred"] or 0.0)) / N
-        v = (r["var_wres"] or 0.0) / n_A + (u["var_pred"] or 0.0) / N
-        out[key] = (float(t), float(v) ** 0.5)
-    return out
+    return {tuple(r[c] for c in group_cols): r for r in u_rows}
 
 
 def clw_grouped(
@@ -681,23 +353,20 @@ def clw_grouped(
     if weights_A is not None:
         d = f"COALESCE(CAST({weights_A} AS DOUBLE), 0.0)"
         base = df.filter(in_sample)
+        keys0 = [tuple(r[c] for c in group_cols)
+                 for r in df.select(*group_cols).distinct().collect()]
     else:
-        n_rows = (
-            df.groupBy(*group_cols)
-            .agg(
+        n_rows = {
+            tuple(r[c] for c in group_cols): r
+            for r in df.groupBy(*group_cols).agg(
                 F.count(F.lit(1)).alias("nt"),
                 F.sum(F.col(ind_var_A).cast("double")).alias("na"),
-            )
-            .collect()
-        )
-        d_by = {
-            tuple(r[c] for c in group_cols): (
-                float(r["nt"]) / max(float(r["na"] or 0.0), 1.0),
-            )
-            for r in n_rows
+            ).collect()
         }
-        base = _broadcast_scalars(df.filter(in_sample), group_cols, d_by,
-                                  ["__dA__"])
+        keys0 = sorted(n_rows)
+        dA = [float(n_rows[k]["nt"]) / max(float(n_rows[k]["na"] or 0.0), 1.0) for k in keys0]
+        base = bind_group_values(df.filter(in_sample), group_cols, keys0,
+                                 {"__dA__": np.array(dA)})
         d = "__dA__"
     # n_iter + 3 passes re-read this small (A ∪ B) frame: cache it so
     # each Newton step scans ~|A|+|B| rows, not the full population
@@ -711,22 +380,19 @@ def clw_grouped(
     # accumulate leaked executor cache blocks)
     try:
 
-        keys0 = sorted(d_by.keys()) if weights_A is None else [
-            tuple(r[c] for c in group_cols)
-            for r in df.select(*group_cols).distinct().collect()
-        ]
         thetas: dict[tuple, np.ndarray] = {key: np.zeros(k) for key in keys0}
         tcols = [f"__t{i}__" for i in range(k)]
         bad_keys: set = set()
+
+        def bind_thetas(frame: DataFrame) -> DataFrame:
+            th = np.array([thetas[key] for key in keys0]).reshape(len(keys0), k)
+            return bind_group_values(frame, group_cols, keys0, dict(zip(tcols, th.T)))
 
         def eta_sql() -> str:
             return "(" + " + ".join(f"{tcols[i]} * {xs[i]}" for i in range(k)) + ")"
 
         for _it in range(n_iter):
-            work = _broadcast_scalars(
-                base, group_cols,
-                {key: tuple(th) for key, th in thetas.items()}, tcols,
-            )
+            work = bind_thetas(base)
             # 1e-300 floor: an underflowed sigmoid (exact 0.0 at extreme
             # negative eta) would raise ANSI DIVIDE_BY_ZERO in every /p
             # moment; the floor binds only past double underflow (see
@@ -784,11 +450,7 @@ def clw_grouped(
         )
         _note_fit(diag, fit)
 
-        work = _broadcast_scalars(
-            base, group_cols, {key: tuple(th) for key, th in thetas.items()},
-            tcols,
-        )
-        work, m_col = fit.predict_expr_grouped(work)
+        work, m_col = fit.predict_expr_grouped(bind_thetas(base))
         p_c = F.expr(f"greatest(1e-300, (1.0 / (1.0 + exp(-{eta_sql()}))))")
         a_c, b_c = F.expr(a), F.expr(b)
         d_c, y_c = F.expr(d), F.expr(y)
@@ -904,13 +566,11 @@ def clw_grouped(
                     continue
                 folded[key] = (mu_i, mu_d, *b_ipw, *bt, *bb)
             if folded:
-                vwork = _broadcast_scalars(
-                    _broadcast_scalars(
-                        base, group_cols,
-                        {key: tuple(th) for key, th in thetas.items()}, tcols,
-                    ),
-                    group_cols, folded, names,
-                )
+                # groups left out of `folded` bind nulls and are skipped below
+                fkeys = list(folded)
+                fvals = np.array([folded[key] for key in fkeys]).reshape(len(fkeys), len(names))
+                vwork = bind_group_values(bind_thetas(base), group_cols, fkeys,
+                                          dict(zip(names, fvals.T)))
                 vwork, m2 = fit.predict_expr_grouped(vwork)
                 vwork = vwork.withColumn("__m__", m2)
                 bx = sum(

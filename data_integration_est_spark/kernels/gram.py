@@ -74,10 +74,22 @@ def gram_aggregate(
     w = F.lit(1.0) if weight_col is None else _as_col(weight_col).cast("double")
     xs = [F.col(c).cast("double") for c in x_cols]
     ys = [F.col(c).cast("double") for c in y_cols]
+    rows = df.groupBy(*group_cols).agg(*gram_sums(xs, ys, w, F.lit(1))).collect()
+    return gram_collect({tuple(r[c] for c in group_cols): r for r in rows}, x_cols, y_cols)
 
+
+def gram_sums(
+    xs: list[Column], ys: list[Column], w: Column, counted: Column | None = None
+) -> list[Column]:
+    """The aggregates of one Gram (names private to it): ``sum w``, the
+    count of rows where ``counted`` (default ``w``) is not null,
+    ``sum w x x'`` and ``sum w x y`` — a null ``w`` leaves a row out, so a
+    masked ``w`` lets the Gram ride another aggregation pass.
+    :func:`gram_collect` reads them back."""
+    k = len(xs)
     aggs: list[Column] = [
         F.sum(w).alias("__sw__"),
-        F.count(F.lit(1)).alias("__n__"),
+        F.count(w if counted is None else counted).alias("__n__"),
     ]
     for i in range(k):
         for j in range(i, k):
@@ -85,45 +97,26 @@ def gram_aggregate(
     for i in range(k):
         for t in range(len(ys)):
             aggs.append(F.sum(w * xs[i] * ys[t]).alias(f"__c_{i}_{t}__"))
+    return aggs
 
-    if group_cols:
-        rows = df.groupBy(*group_cols).agg(*aggs).collect()
-    else:
-        rows = df.agg(*aggs).collect()
 
-    g = len(rows)
+def gram_collect(rows: dict, x_cols: list[str], y_cols: list[str]) -> GramResult:
+    """A :class:`GramResult` from collected :func:`gram_sums` rows
+    (group key -> row)."""
+    k, m, g = len(x_cols), len(y_cols), len(rows)
     gram = np.zeros((g, k, k))
-    xy = np.zeros((g, k, max(len(y_cols), 1)))
+    xy = np.zeros((g, k, m))
     sum_w = np.zeros(g)
     count = np.zeros(g, dtype=np.int64)
-    keys: list[tuple] = []
-    for r, row in enumerate(rows):
-        keys.append(tuple(row[c] for c in group_cols))
+    for r, row in enumerate(rows.values()):
         sum_w[r] = row["__sw__"] or 0.0
         count[r] = row["__n__"] or 0
         for i in range(k):
             for j in range(i, k):
-                v = row[f"__g_{i}_{j}__"]
-                gram[r, i, j] = gram[r, j, i] = 0.0 if v is None else v
-            for t in range(len(y_cols)):
-                v = row[f"__c_{i}_{t}__"]
-                xy[r, i, t] = 0.0 if v is None else v
+                gram[r, i, j] = gram[r, j, i] = row[f"__g_{i}_{j}__"] or 0.0
+            for t in range(m):
+                xy[r, i, t] = row[f"__c_{i}_{t}__"] or 0.0
     return GramResult(
-        x_cols=list(x_cols),
-        y_cols=y_cols,
-        keys=keys,
-        gram=gram,
-        xy=xy[:, :, : len(y_cols)] if y_cols else xy[:, :, :0],
-        sum_w=sum_w,
-        count=count,
+        x_cols=list(x_cols), y_cols=list(y_cols), keys=list(rows), gram=gram, xy=xy,
+        sum_w=sum_w, count=count,
     )
-
-
-def dot_expr(x_cols: list[str], coeffs: np.ndarray | list[float], intercept: float = 0.0) -> Column:
-    """Broadcast a solved k-vector back into a JVM-side column expression:
-    ``intercept + sum_j coeffs[j] * x_j`` — the 'predict' step (reference
-    ``RegDI2.R:212``, ``PC.R:280-283``) with zero Python in the data path."""
-    expr: Column = F.lit(float(intercept))
-    for c, b in zip(x_cols, np.asarray(coeffs, dtype=float).ravel()):
-        expr = expr + F.lit(float(b)) * F.col(c).cast("double")
-    return expr

@@ -15,7 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_est_spark.kernels.gram import GramResult, dot_expr, gram_aggregate
+from data_integration_est_spark.kernels.gram import gram_aggregate, gram_collect, gram_sums
 from data_integration_est_spark.util import local_df
 
 
@@ -117,12 +117,7 @@ def calibrate(
         df.withColumn(ones, F.lit(1.0)), list(x_cols) + [ones],
         weight_col=d_col, group_cols=group_cols,
     )
-    g = GramResult(
-        x_cols=list(x_cols), y_cols=[], keys=g_ext.keys,
-        gram=g_ext.gram[:, :k, :k], xy=g_ext.xy,
-        sum_w=g_ext.sum_w, count=g_ext.count,
-    )
-    ht = g_ext.gram[:, k, :k]
+    keys = g_ext.keys
 
     if isinstance(totals, dict):
         T_shared = np.array([float(totals[c]) for c in x_cols]) if totals else None
@@ -133,9 +128,8 @@ def calibrate(
     else:
         T_shared = None
 
-    ng = len(g.keys)
-    T = np.zeros((ng, k))
-    for i, key in enumerate(g.keys):
+    T = np.zeros((len(keys), k))
+    for i, key in enumerate(keys):
         if totals_by_group is not None:
             T[i] = np.asarray(totals_by_group[key], dtype=float).ravel()
         elif T_shared is not None:
@@ -143,50 +137,68 @@ def calibrate(
         else:
             raise ValueError("must provide `totals` or `totals_by_group`")
 
-    lam = _solve_stacked(g.gram, (T - ht)[..., None], "calibrate").squeeze(-1)
-    lam = lam.reshape(ng, k)
-
-    if group_cols:
-        out = _apply_grouped_linear_weights(df, x_cols, d_col, out_col, group_cols, g.keys, lam)
-    else:
-        out = df.withColumn(
-            out_col,
-            F.col(d_col).cast("double") * (F.lit(1.0) + dot_expr(x_cols, lam[0])),
-        )
+    out, lam = greg_weights(
+        df, x_cols, g_ext.gram[:, :k, :k], g_ext.gram[:, k, :k], T, keys, group_cols,
+        d_col=d_col, out_col=out_col,
+    )
     return CalibrationResult(
         df=out, weight_col=out_col, x_cols=list(x_cols), lambdas=lam,
-        keys=g.keys, group_cols=group_cols,
+        keys=keys, group_cols=group_cols,
     )
 
 
-def _apply_grouped_linear_weights(
-    df: DataFrame,
-    x_cols: list[str],
-    d_col: str,
-    out_col: str,
-    group_cols: list[str],
-    keys: list[tuple],
-    lam: np.ndarray,
+def bind_group_values(
+    df: DataFrame, group_cols: list[str], keys: list[tuple], values: dict[str, np.ndarray]
 ) -> DataFrame:
-    """Join the per-group lambda vectors back (broadcast — O(groups) rows)
-    and emit ``w = d * (1 + x . lam)`` as a column expression."""
-    spark = df.sparkSession
-    k = len(x_cols)
-    lam_cols = [f"__lam_{j}__" for j in range(k)]
-    rows = [tuple(key) + tuple(float(v) for v in lam[i]) for i, key in enumerate(keys)]
-    key_schema = df.select(*group_cols).schema
+    """Attach per-group driver scalars (``name -> array aligned with keys``)
+    as columns: literal columns when ungrouped (no join), else ONE
+    broadcast join of an O(groups)-row table."""
+    if not values:
+        return df
+    if not group_cols:
+        return df.withColumns({n: F.lit(float(np.ravel(v)[0])) for n, v in values.items()})
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    names = list(values)
+    rows = [tuple(key) + tuple(float(values[n][i]) for n in names) for i, key in enumerate(keys)]
     schema = StructType(
-        list(key_schema.fields) + [StructField(c, DoubleType(), False) for c in lam_cols]
+        list(df.select(*group_cols).schema.fields)
+        + [StructField(n, DoubleType(), False) for n in names]
     )
-    lam_df = local_df(spark, rows, schema)
-    joined = df.join(F.broadcast(lam_df), on=group_cols, how="left")
-    dot: Column = F.lit(0.0)
-    for j, c in enumerate(x_cols):
-        dot = dot + F.col(lam_cols[j]) * F.col(c).cast("double")
-    out = joined.withColumn(out_col, F.col(d_col).cast("double") * (F.lit(1.0) + dot))
-    return out.drop(*lam_cols)
+    table = local_df(df.sparkSession, rows, schema)
+    return df.join(F.broadcast(table), on=group_cols, how="left")
+
+
+def greg_weights(
+    df: DataFrame,
+    x_cols: list[str],
+    G: np.ndarray,
+    h: np.ndarray,
+    T: np.ndarray,
+    keys: list[tuple],
+    group_cols: list[str],
+    d_col: str,
+    out_col: str,
+    d: Column | None = None,
+    extra: dict[str, np.ndarray] | None = None,
+) -> tuple[DataFrame, np.ndarray]:
+    """The GREG step behind :func:`calibrate` and the fused estimator
+    passes: from the collected per-group Gram ``G = sum_s d x x'`` and
+    ``h = sum_s d x``, solve ``G lam = T - h`` (one stacked solve) and add
+    ``out_col = d_col * (1 + x'lam)``.  ``lam`` and the ``extra`` per-group
+    scalars are bound in the same step (:func:`bind_group_values`); when
+    ``d`` is given it becomes ``d_col`` first and may reference the
+    ``extra`` columns, which stay on the frame.  Returns (frame, lam)."""
+    k = len(x_cols)
+    lam = _solve_stacked(G, (T - h)[..., None], "calibrate").reshape(len(keys), k)
+    lam_cols = [f"__lam_{j}__" for j in range(k)]
+    df = bind_group_values(df, group_cols, keys, {**dict(zip(lam_cols, lam.T)), **(extra or {})})
+    if d is not None:
+        df = df.withColumn(d_col, d)
+    g: Column = F.lit(1.0)
+    for lc, c in zip(lam_cols, x_cols):
+        g = g + F.col(lc) * F.col(c).cast("double")
+    return df.withColumn(out_col, F.col(d_col).cast("double") * g).drop(*lam_cols), lam
 
 
 @dataclass
@@ -211,48 +223,22 @@ class FitResult:
     def coef_for(self, key: tuple = ()) -> np.ndarray:
         return self.coef[{k: i for i, k in enumerate(self.keys)}[key]]
 
-    def predict_expr(self, key: tuple = ()) -> Column:
-        """Linear predictor (response scale) as a column expression —
-        ``predict(fit, newdata=data, type="response")`` (``RegDI2.R:212``,
-        ``PC.R:280-283,318``)."""
-        b = self.coef_for(key)
-        if self.intercept:
-            eta = dot_expr(self.x_cols, b[1:], intercept=float(b[0]))
-        else:
-            eta = dot_expr(self.x_cols, b)
-        if self.kind == "logistic":
-            return F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        if self.kind == "poisson":
-            return F.exp(eta)
-        return eta
-
     def predict_expr_grouped(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        """Grouped variant: broadcast-join the per-group coefficient rows,
-        return (augmented df, prediction column)."""
-        spark = df.sparkSession
-        k = self.coef.shape[1]
-        bcols = [f"__b_{j}__" for j in range(k)]
-        rows = [tuple(key) + tuple(float(v) for v in self.coef[i]) for i, key in enumerate(self.keys)]
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        key_schema = df.select(*self.group_cols).schema
-        schema = StructType(
-            list(key_schema.fields) + [StructField(c, DoubleType(), False) for c in bcols]
-        )
-        bdf = local_df(spark, rows, schema)
-        joined = df.join(F.broadcast(bdf), on=self.group_cols, how="left")
-        xs = self.x_cols
-        eta: Column = F.col(bcols[0]) if self.intercept else F.lit(0.0)
+        """``predict(fit, newdata=df, type="response")`` (``RegDI2.R:212``,
+        ``PC.R:280-283,318``): bind the coefficients per group
+        (:func:`bind_group_values` — literals when ungrouped), return
+        (augmented df, prediction column)."""
+        bcols = [f"__b_{j}__" for j in range(self.coef.shape[1])]
+        df = bind_group_values(df, self.group_cols, self.keys, dict(zip(bcols, self.coef.T)))
         off = 1 if self.intercept else 0
-        for j, c in enumerate(xs):
+        eta: Column = F.col(bcols[0]) if self.intercept else F.lit(0.0)
+        for j, c in enumerate(self.x_cols):
             eta = eta + F.col(bcols[j + off]) * F.col(c).cast("double")
         if self.kind == "logistic":
-            pred = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        elif self.kind == "poisson":
-            pred = F.exp(eta)
-        else:
-            pred = eta
-        return joined, pred
+            return df, F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+        if self.kind == "poisson":
+            return df, F.exp(eta)
+        return df, eta
 
 
 def fit_ols(
@@ -271,14 +257,32 @@ def fit_ols(
     *is* the sufficient statistic that crosses the network.)
     """
     group_cols = list(group_cols or [])
-    work = df
-    ones = "__ones__"
-    xs = list(x_cols)
-    if intercept:
-        work = work.withColumn(ones, F.lit(1.0))
-        xs = [ones] + xs
-    g = gram_aggregate(work, xs, y_cols=[y_col], weight_col=weight_col, group_cols=group_cols)
-    k = len(xs)
+    aggs = ols_sums(y_col, x_cols, intercept, F.lit(True), weight_col)
+    rows = df.groupBy(*group_cols).agg(*aggs).collect()
+    return ols_from_sums({tuple(r[c] for c in group_cols): r for r in rows},
+                         y_col, x_cols, intercept, group_cols)
+
+
+def ols_sums(y_col: str, x_cols: list[str], intercept: bool, sample: Column,
+             weight_col: str | None = None) -> list[Column]:
+    """:func:`fit_ols`'s sufficient statistics as masked sums over the rows
+    of ``sample`` with no null or NaN in the response, the predictors or
+    the weight (R ``lm``'s ``na.omit``), so the fit can also ride another
+    aggregation pass; :func:`ols_from_sums` solves them."""
+    ok = sample
+    for c in [y_col, *x_cols] + ([weight_col] if weight_col else []):
+        ok = ok & F.col(c).isNotNull() & ~F.isnan(F.col(c).cast("double"))
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+    xs = ([F.lit(1.0)] if intercept else []) + [F.col(c).cast("double") for c in x_cols]
+    return gram_sums(xs, [F.col(y_col).cast("double")], F.when(ok, w))
+
+
+def ols_from_sums(rows: dict, y_col: str, x_cols: list[str], intercept: bool,
+                  group_cols: list[str]) -> FitResult:
+    """The :func:`fit_ols` result from collected :func:`ols_sums` rows
+    (group key -> row)."""
+    g = gram_collect(rows, (["__ones__"] if intercept else []) + list(x_cols), [y_col])
+    k = g.gram.shape[1]
     n_min = int(g.count.min()) if len(g.keys) else 0
     bad = np.asarray(g.count) < k
     if n_min < k and not group_cols:
@@ -293,8 +297,6 @@ def fit_ols(
         # Grouped fit: degrade ONLY the undersized groups to NaN instead of
         # aborting the whole (gamma, sim) grid — the reference's guard is
         # per-call, not global.  Identity Grams keep the stacked solve sane.
-        gram = gram.copy()
-        xy = xy.copy()
         gram[bad] = np.eye(k)
         xy[bad] = 0.0
     beta = _solve_ols_stacked(gram, xy[:, :, 0:1], "fit_ols").squeeze(-1).reshape(len(g.keys), k)
@@ -469,21 +471,10 @@ def _fit_irls_passes(
 
     converged = False
     for _ in range(max_iter):
-        if group_cols:
-            bdf_fit = FitResult(x_cols=list(x_cols), intercept=intercept, coef=beta,
-                                keys=keys, group_cols=group_cols, kind=family)
-            joined, p = bdf_fit.predict_expr_grouped(work)
-            iter_df = joined.withColumn("__p__", p)
-        else:
-            if intercept:
-                eta = dot_expr(list(x_cols), beta[0, 1:], intercept=float(beta[0, 0]))
-            else:
-                eta = dot_expr(list(x_cols), beta[0])
-            mu = (
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-                if family == "logistic" else F.exp(eta)
-            )
-            iter_df = work.withColumn("__p__", mu)
+        bdf_fit = FitResult(x_cols=list(x_cols), intercept=intercept, coef=beta,
+                            keys=keys, group_cols=group_cols, kind=family)
+        joined, p = bdf_fit.predict_expr_grouped(work)
+        iter_df = joined.withColumn("__p__", p)
 
         pcol = F.col("__p__")
         # IRLS working weight = w * V(mu): p(1-p) for binomial, mu for Poisson
@@ -732,13 +723,9 @@ def _calibrate_bounded_grouped(
     group's truncation sequence advances in the same groupBy pass; the
     per-group lambdas of each wave rejoin as broadcast columns so the
     sticky clip state stays a column expression."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    spark = df.sparkSession
     k = len(x_cols)
     d = F.col(d_col).cast("double")
     xs = [F.col(c).cast("double") for c in x_cols]
-    key_schema = df.select(*group_cols).schema
 
     def g_expr_cols(lam_cols: list[str]):
         e = F.lit(1.0)
@@ -806,24 +793,12 @@ def _calibrate_bounded_grouped(
                 f"at iteration {it} — totals infeasible in bounds for some "
                 "group?"
             ) from e
-        # broadcast-join this wave's per-group lambdas (the SAME tiny
-        # frame joins both the iteration projection and the original df)
+        # broadcast-join this wave's per-group lambdas onto both the
+        # iteration projection and the original df
         lam_cols = [f"__cbw{it}_{j}__" for j in range(k)]
-        lam_rows = [
-            tuple(key) + tuple(float(v) for v in lam[gi])
-            for gi, key in enumerate(keys)
-        ]
-        lam_schema = StructType(
-            list(key_schema.fields)
-            + [StructField(cn, DoubleType(), False) for cn in lam_cols]
-        )
-        lam_df = local_df(spark, lam_rows, lam_schema)
-        work_iter = work_iter.join(
-            F.broadcast(lam_df), on=group_cols, how="left",
-        )
-        work = work.join(
-            F.broadcast(lam_df), on=group_cols, how="left",
-        )
+        lam_vals = dict(zip(lam_cols, lam.T))
+        work_iter = bind_group_values(work_iter, group_cols, keys, lam_vals)
+        work = bind_group_values(work, group_cols, keys, lam_vals)
         joined_lam_cols += lam_cols
         last_lam_cols = lam_cols
         ge = g_expr_cols(lam_cols)
@@ -914,7 +889,6 @@ def calibrate_raking(
 
     d = F.col(d_col).cast("double")
     xs = [F.col(c).cast("double") for c in x_cols]
-    spark = df.sparkSession
 
     def tilt_expr(lam_row) -> Column:
         e: Column = F.lit(0.0)
@@ -939,28 +913,13 @@ def calibrate_raking(
     )
     work = it_src
     lam_cols = [f"__crk{j}__" for j in range(k)]
-    if group_cols:
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        key_schema = df.select(*group_cols).schema
-
-        def bind_lambdas(lam_mat: np.ndarray, src: DataFrame = df) -> DataFrame:
-            # rebind from the ORIGINAL df each iteration (fixed column
-            # names) so the plan holds exactly ONE broadcast join
-            # regardless of n_iter — the r6 verdict's accumulating-join
-            # fix (previously iteration i re-executed all i-1 joins)
-            lam_rows = [
-                tuple(key) + tuple(float(v) for v in lam_mat[gi])
-                for gi, key in enumerate(keys)
-            ]
-            schema = StructType(
-                list(key_schema.fields)
-                + [StructField(cn, DoubleType(), False) for cn in lam_cols]
-            )
-            return src.join(
-                F.broadcast(local_df(spark, lam_rows, schema)),
-                on=group_cols, how="left",
-            )
+    def bind_lambdas(lam_mat: np.ndarray, src: DataFrame = df) -> DataFrame:
+        # rebind from the ORIGINAL df each iteration (fixed column
+        # names) so the plan holds exactly ONE broadcast join
+        # regardless of n_iter — the r6 verdict's accumulating-join
+        # fix (previously iteration i re-executed all i-1 joins)
+        return bind_group_values(src, group_cols, keys, dict(zip(lam_cols, lam_mat.T)))
 
     for it in range(n_iter):
         if group_cols and lam is not None:
@@ -1103,7 +1062,6 @@ def calibrate_logit(
     A = (U - L) / ((1.0 - L) * (U - 1.0))
     d = F.col(d_col).cast("double")
     xs = [F.col(c).cast("double") for c in x_cols]
-    spark = df.sparkSession
 
     def g_of_u(u: Column):
         e = F.exp(F.lit(A) * u)
@@ -1136,24 +1094,9 @@ def calibrate_logit(
     )
     work = it_src
     lam_cols = [f"__clg{j}__" for j in range(k)]
-    if group_cols:
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        key_schema = df.select(*group_cols).schema
-
-        def bind_lambdas(lam_mat: np.ndarray, src: DataFrame = df) -> DataFrame:
-            lam_rows = [
-                tuple(key) + tuple(float(v) for v in lam_mat[gi])
-                for gi, key in enumerate(keys)
-            ]
-            schema = StructType(
-                list(key_schema.fields)
-                + [StructField(cn, DoubleType(), False) for cn in lam_cols]
-            )
-            return src.join(
-                F.broadcast(local_df(spark, lam_rows, schema)),
-                on=group_cols, how="left",
-            )
+    def bind_lambdas(lam_mat: np.ndarray, src: DataFrame = df) -> DataFrame:
+        return bind_group_values(src, group_cols, keys, dict(zip(lam_cols, lam_mat.T)))
 
     for _ in range(n_iter):
         if group_cols and lam is not None:

@@ -467,7 +467,7 @@ def run_stratified_study(
     g = ["sim_id"]
     # shared battery prep (r17; see run_nmar_study): PC_X1 and PC_X1_II
     # calibrate the SAME B sample to the SAME HT-estimated stratum
-    # totals from the weighted A sample — compute the triple once.
+    # totals from the weighted A sample — compute the calibration once.
     from concurrent.futures import ThreadPoolExecutor
 
     prep = ThreadPoolExecutor(max_workers=1)

@@ -1,8 +1,8 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Test/bench runs happen on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the
-configuration below is chosen so the same code runs unchanged on a real
-multi-executor cluster:
+Test/bench runs happen on ``local[$SPARK_GRAFT_CPUS]`` (single JVM; by
+default the CPUs this process may run on); the configuration below is
+chosen so the same code runs unchanged on a real multi-executor cluster:
 
 - AQE on (runtime coalescing of shuffle partitions, skew-join splitting)
 - Arrow on (the few pandas-interop paths are batch-vectorized)
@@ -38,7 +38,9 @@ DEFAULT_CONF: dict[str, str] = {
 
 
 def _cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Local parallelism: ``SPARK_GRAFT_CPUS`` when set (a deployment
+    setting), else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(

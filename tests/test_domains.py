@@ -90,3 +90,38 @@ def test_regdi_by_rounding_and_order(pop):
     assert [r["dom"] for r in rows] == ["0", "1", "2"]
     for r in rows:
         assert r["est_mean"] == round(r["est_mean"], 4)
+
+
+def test_domain_without_a_units(pop):
+    """One domain with no S_A units does not fail the call: ``pc_by``
+    (scenario 1 never uses S_A) still estimates it with n_a = 0, and
+    ``regdi_by`` leaves it out and estimates the other domains."""
+    no_a = pop.withColumn(
+        "ind_a", F.when(F.col("dom") == "2", 0).otherwise(F.col("ind_a"))
+    )
+    pc = {
+        r["dom"]: r
+        for r in pc_by(
+            no_a, "dom", "y", "ind_b", aux_vars=["x1", "x2"], ind_var_A="ind_a"
+        ).collect()
+    }
+    assert set(pc) == {"0", "1", "2"}
+    assert pc["2"]["n_a"] == 0
+    for dom in sorted(pc):
+        sub = no_a.filter(F.col("dom") == dom)
+        want = pc_estimator(data=sub, y_A_col="y", y_B_col="y",
+                            ind_var_A="ind_a", ind_var_B="ind_b",
+                            aux_vars=["x1", "x2"], scenario=1)
+        assert pc[dom]["est_mean"] == pytest.approx(want.estimate, rel=1e-9)
+        assert pc[dom]["est_se"] == pytest.approx(want.se, rel=1e-7)
+
+    rd = {
+        r["dom"]: r
+        for r in regdi_by(no_a, "dom", "y", "y", "ind_a", "ind_b").collect()
+    }
+    assert set(rd) == {"0", "1"}
+    for dom in sorted(rd):
+        sub = no_a.filter(F.col("dom") == dom)
+        want = regdi(data=sub, y_A_col="y", y_B_col="y",
+                     ind_var_A="ind_a", ind_var_B="ind_b")
+        assert rd[dom]["est_mean"] == pytest.approx(want.mean, rel=1e-9)
